@@ -532,7 +532,9 @@ def q_sharded_membership(spark, sf_dir):
         assert sum(int(r.fail_count) for r in rows) == 0
         idx = ShardedProbeIndex(spark, {int(r.shard_id): bytes(r.state) for r in rows})
         while len(_SHARDED_IDX_CACHE) >= 4:
-            _, old = _SHARDED_IDX_CACHE.popitem()
+            # evict the OLDEST entry: popitem() takes the newest, whose
+            # broadcast backs the lazy frame the previous call returned
+            old = _SHARDED_IDX_CACHE.pop(next(iter(_SHARDED_IDX_CACHE)))
             try:
                 old.destroy()
             except Exception:

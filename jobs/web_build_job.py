@@ -42,95 +42,27 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 
-
-def _build_fixed(spark, docs, args):
-    """The fixed-size sketch half (hll/cms/kll): checkpointed per-sketch
-    builds with per-partition lineage when --checkpoint is set, else the
-    fused one-pass build. Same fixed/{hll,cms,kll}.bin contract either
-    way; the checkpointed CMS builds over exploded tokens because
-    build_sketches folds one column per pass — trading the fused fold's
-    value_counts map-side combine for per-partition resumability."""
-    import os
-
+def _build_fixed(docs, args):
+    """The fixed-size sketch half (hll/cms/kll): one fused pass over
+    the scan partitions. --checkpoint makes that pass resumable per
+    partition; the fold, and so fixed/*.bin, is the same either way."""
     from sketchlib.sketches import CountMinSketch, HyperLogLog, KLLSketch
-    from sketchlib.spark.build import build_sketches
-    from sketchlib.spark.merge import state_bytes_hint, tree_merge
+    from sketchlib.spark.merge import state_bytes_hint
     from sketchlib.spark.webbuild import build_web_sketches, merge_web_sketches
 
-    if not args.checkpoint:
-        factories = {
-            "hll": lambda: HyperLogLog(14),
-            "cms": lambda: CountMinSketch(width=args.cms_width, depth=4),
-            "kll": lambda: KLLSketch(200),
-        }
-        return merge_web_sketches(
-            build_web_sketches(docs, factories),
-            # byte-aware gate: --cms-width defaults to 1<<16 (2 MB
-            # state); at the 256-partition threshold the direct pull
-            # would be ~1.5 GB — the hint routes wide builds to the
-            # bounded executor fold
-            state_bytes=state_bytes_hint(*factories.values()),
-        )
-    from pyspark.sql import functions as F
-
-    # (?U) = Java UNICODE_CHARACTER_CLASS, so \S complements the
-    # Unicode White_Space set — the same set Arrow's
-    # utf8_split_whitespace uses in the fused path. Without it,
-    # Java \s is ASCII-only and a scraped '&nbsp;' (U+00A0) glues
-    # two tokens together, making cms.bin counts depend on whether
-    # --checkpoint was passed (tokenizer-parity pytest pins this).
-    toks = docs.select(
-        F.explode(
-            F.expr("regexp_extract_all(coalesce(text,''), '(?U)\\\\S+', 0)")
-        ).alias("tok")
+    factories = {
+        "hll": lambda: HyperLogLog(14),
+        "cms": lambda: CountMinSketch(width=args.cms_width, depth=4),
+        "kll": lambda: KLLSketch(200),
+    }
+    return merge_web_sketches(
+        build_web_sketches(docs, factories, checkpoint_dir=args.checkpoint),
+        # byte-aware gate: --cms-width defaults to 1<<16 (2 MB
+        # state); at the 256-partition threshold the direct pull
+        # would be ~1.5 GB — the hint routes wide builds to the
+        # bounded executor fold
+        state_bytes=state_bytes_hint(*factories.values()),
     )
-    # the three sketches are independent full scans — build them
-    # concurrently (driver threads) instead of serially
-    from concurrent.futures import ThreadPoolExecutor
-
-    def hll():
-        fac = lambda: HyperLogLog(14)  # noqa: E731
-        return tree_merge(
-            build_sketches(
-                docs.select("url"),
-                "url",
-                fac,
-                checkpoint_dir=os.path.join(args.checkpoint, "hll"),
-            ),
-            state_bytes=state_bytes_hint(fac),
-        )
-
-    def cms():
-        fac = lambda: CountMinSketch(width=args.cms_width, depth=4)  # noqa: E731
-        return tree_merge(
-            build_sketches(
-                toks,
-                "tok",
-                fac,
-                checkpoint_dir=os.path.join(args.checkpoint, "cms"),
-            ),
-            state_bytes=state_bytes_hint(fac),
-        )
-
-    def kll():
-        fac = lambda: KLLSketch(200)  # noqa: E731
-        return tree_merge(
-            build_sketches(
-                docs.select(F.length("text").cast("double").alias("v")),
-                "v",
-                fac,
-                checkpoint_dir=os.path.join(args.checkpoint, "kll"),
-                numeric=True,
-            ),
-            state_bytes=state_bytes_hint(fac),
-        )
-
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        futs = {"hll": ex.submit(hll), "cms": ex.submit(cms), "kll": ex.submit(kll)}
-        fixed = {k: f.result() for k, f in futs.items()}
-    # empty partitions yield no sketch rows: drop None merges so both
-    # branches return the same {present names} shape
-    return {k: v for k, v in fixed.items() if v is not None}
 
 
 def main() -> None:
@@ -166,7 +98,7 @@ def _run(spark, args) -> None:
     t0 = time.time()
 
     def fixed_job():
-        return _build_fixed(spark, docs, args)
+        return _build_fixed(docs, args)
 
     def shard_job():
         # dedup BEFORE the membership build: a recrawl corpus repeats

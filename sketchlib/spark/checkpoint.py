@@ -1,9 +1,9 @@
 """Checkpoint-resumable build lineage (north-rule requirement).
 
 Two granularities:
-* partition-level: build_sketches(checkpoint_dir=...) — each task
-  atomically publishes its finished sketch row as
-  ``part-{pid}.arrow``; a rerun re-emits stored rows instead of
+* partition-level: build.build_named(checkpoint_dir=...) (behind
+  build_sketches / build_web_sketches) — each task atomically
+  publishes its finished row group as ``part-{pid}.arrow``; a rerun re-emits stored rows instead of
   recomputing (the anti-join on completed lineage happens implicitly
   by file existence, with identical input partitioning guaranteed by
   deterministic parquet splits under fixed maxPartitionBytes).

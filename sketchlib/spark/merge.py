@@ -1,27 +1,32 @@
-"""Two-level associative merge of per-partition sketch rows.
+"""THE merge: two-level associative merge of named sketch rows.
 
 The Spark analogue of ``treeAggregate`` (SURVEY.md §3.4 step 5):
-level 1 routes partition rows round-robin to ≤fanout groups and
-STREAMS each group through a running merge executor-side; level 2
-merges the ≤fanout survivors on the driver. Merge order within a
-group is whatever the shuffle delivers — safe because every sketch's
-merge is associative + commutative (property-tested, north-rule gate).
+``merge_sketches`` folds a SKETCH_ROW_SCHEMA frame (build.py) into
+``{name: sketch}``; ``tree_merge`` is its one-entry case. ``gather``
+is the one direct-vs-executor gate: a small blob frame is collected and
+folded driver-side; past the gate, level 1 routes rows round-robin to
+≤fanout groups and STREAMS each group through a running merge
+executor-side, and the driver merges the ≤fanout survivors. Merge
+order within a group is whatever the shuffle delivers — safe because
+every sketch's merge is associative + commutative (property-tested,
+north-rule gate).
 
 Level 1 is a deliberate RDD ``mapPartitions`` — one of the rare spots
 where the imperative per-partition escape hatch is the *correct* tool:
 the rows are KB–MB sketch blobs (never data rows), and an RDD iterator
 hands them over ONE AT A TIME, so task memory is exactly
-running_state + one incoming blob no matter how many scan partitions
-fed the group. Both dataframe-native shapes materialize multi-blob
-batches the UDF can't refuse: ``groupBy().applyInPandas`` builds the
-whole group as one pandas frame (~P/fanout blobs), and ``mapInArrow``
-materializes ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows
-(default 10k) per input batch — with MB-scale CMS states that is tens
-of GB per task at the 100 TB / 128 MB-partition scale this library
+n_names × running_state + one incoming blob no matter how many scan
+partitions fed the group. Both dataframe-native shapes materialize
+multi-blob batches the UDF can't refuse: ``groupBy().applyInPandas``
+builds the whole group as one pandas frame (~P/fanout blobs), and
+``mapInArrow`` materializes ``spark.sql.execution.arrow.maxRecordsPerBatch``
+rows (default 10k) per input batch — with MB-scale CMS states that is
+tens of GB per task at the 100 TB / 128 MB-partition scale this library
 targets (and no byte-capped batch conf exists for mapInArrow in
 Spark 4.1; ``maxBytesPerBatch`` only applies to transformWithState).
 
-Shuffle volume: fanout × state_size — KBs–MBs, never data-scale.
+Shuffle volume: fanout × n_names × state_size — KBs–MBs, never
+data-scale.
 """
 
 from __future__ import annotations
@@ -29,31 +34,37 @@ from __future__ import annotations
 from ..serde import loads
 from .build import SKETCH_ROW_SCHEMA, sketch_metrics
 
+_FOLD_COLS = ("sketch", "part_id", "n_rows", "state")
 
-def _fold_rows(rows):
-    """Streaming fold of one merge group's (part_id, n_rows, state)
-    tuples: the running sketch plus ONE incoming blob resident at a
-    time — memory is 2 × state_size regardless of group size."""
-    sk = None
-    part_id = 0
-    n_rows = 0
-    for pid, nr, blob in rows:
-        other = loads(bytes(blob))
-        if sk is None:
-            sk, part_id, n_rows = other, int(pid), int(nr)
+
+def _fold_named_rows(rows):
+    """Streaming fold of one merge group's (sketch, part_id, n_rows,
+    state) rows: one running sketch per name, each incoming blob merged
+    then dropped — memory is n_names × state_size + one blob
+    regardless of group size. Yields full SKETCH_ROW_SCHEMA rows, so a
+    level-1 frame is itself a mergeable sketch frame."""
+    sks: dict[str, object] = {}
+    n_rows: dict[str, int] = {}
+    part_id: dict[str, int] = {}
+    for name, pid, count, blob in rows:
+        sk = loads(bytes(blob))
+        if name in sks:
+            sks[name].merge(sk)
+            n_rows[name] += int(count)
+            part_id[name] = min(part_id[name], int(pid))
         else:
-            sk.merge(other)
-            part_id = min(part_id, int(pid))
-            n_rows += int(nr)
-    if sk is not None:
+            sks[name] = sk
+            n_rows[name] = int(count)
+            part_id[name] = int(pid)
+    for name, sk in sks.items():
         items, fails, load = sketch_metrics(sk)
-        yield (part_id, n_rows, items, fails, load, sk.to_bytes())
+        yield (name, part_id[name], n_rows[name], items, fails, load, sk.to_bytes())
 
 
 def fold_groups_rdd(rdd, k: int, fold):
     """Round-robin routing of an RDD's rows to ``k`` merge groups +
-    streaming per-group ``fold`` (shared by tree_merge and
-    webbuild.merge_web_sketches — keep the routing in ONE place).
+    streaming per-group ``fold`` (shared by every executor-level merge
+    — keep the routing in ONE place).
 
     Keyed by ``(source_partition_index + row_index) % k`` — balanced
     for ANY input, independent of the part_id column's diversity. A
@@ -80,11 +91,11 @@ def _direct_collect(frame):
     ``spark.driver.maxResultSize`` rejection into actionable guidance.
 
     The direct path gates on PARTITION count — a fine proxy for
-    build_sketches/build_web_sketches outputs (a handful of rows per
-    partition) but not for a blob table re-read from storage or
-    coalesced after a union, where few partitions can hold many
-    MB-scale rows. maxResultSize (default 1g) is the loud backstop for
-    that shape; the remedy is the executor-level path."""
+    build outputs (a handful of rows per partition) but not for a blob
+    table re-read from storage or coalesced after a union, where few
+    partitions can hold many MB-scale rows. maxResultSize (default 1g)
+    is the loud backstop for that shape; the remedy is the
+    executor-level path."""
     try:
         return frame.collect()
     except Exception as e:  # pragma: no cover - env-sized threshold
@@ -98,17 +109,47 @@ def _direct_collect(frame):
         raise
 
 
-def _tree_fold_rdd(sketch_df, fanout: int):
-    return fold_groups_rdd(
-        sketch_df.select("part_id", "n_rows", "state").rdd, fanout, _fold_rows
-    )
+def gather(
+    frame,
+    fold,
+    fanout: int,
+    direct_partitions: int = 256,
+    state_bytes: int | None = None,
+    direct_bytes: int = 256 << 20,
+):
+    """The direct-vs-executor gate → the rows the driver finishes.
 
+    At ≤ ``direct_partitions`` partitions of ``frame`` the executor
+    level is SKIPPED: one ``collect`` of the rows as they are. The
+    driver transient is p × state_size (≤ 256 × ~0.5 MB ≈ 128 MB at the
+    flagship's CMS geometry), and the build stage keeps its full scan
+    parallelism because ``collect`` is a plain job over the existing
+    partitions. Measured on the 800k-doc bench corpus (65 blob rows):
+    the level-1 RDD route+partitionBy+fold costs 1.1–1.7 s of pure
+    task/python-shuffle overhead where the direct collect-fold costs
+    0.6 s — two extra stages buy nothing until the blob count is large
+    enough that a single driver pull would be GBs.
 
-def tree_merge_df(sketch_df, fanout: int = 16):
-    """Level-1 merge: p partition rows → ≤fanout rows, executor-side."""
-    return sketch_df.sparkSession.createDataFrame(
-        _tree_fold_rdd(sketch_df, fanout), SKETCH_ROW_SCHEMA
-    )
+    Past the threshold (100 TB ⇒ ~10^5-10^6 scan partitions) level 1
+    routes rows round-robin to ≤fanout streaming ``fold``s
+    executor-side (``fold_groups_rdd``), so the driver never pulls more
+    than fanout row groups. ``fold``'s rows must hold the fields the
+    caller reads at the same positions as ``frame``'s rows, so the
+    caller finishes both shapes the same way.
+
+    ``state_bytes`` makes the gate BYTE-aware: when the caller knows
+    one partition's state size (``state_bytes_hint(*factories)`` —
+    exact for array-backed sketches, no Spark job), the direct path
+    additionally requires p × state_bytes ≤ ``direct_bytes`` (default
+    256 MB of driver transient). Without it the gate counts partitions
+    only, which a 2 MB-wide CMS at the 256-partition threshold turns
+    into a silent ~0.5 GB driver pull — maxResultSize is the loud
+    backstop, but the byte cap avoids tripping it at all."""
+    p = frame.rdd.getNumPartitions()
+    fits_bytes = state_bytes is None or p * state_bytes <= direct_bytes
+    if p <= direct_partitions and fits_bytes:
+        return _direct_collect(frame)
+    return fold_groups_rdd(frame.rdd, min(fanout, max(p, 1)), fold).collect()
 
 
 def state_bytes_hint(*factories) -> int:
@@ -122,6 +163,42 @@ def state_bytes_hint(*factories) -> int:
     return sum(len(fac().to_bytes()) for fac in factories)
 
 
+def merge_sketches(
+    sketch_df,
+    fanout: int = 64,
+    direct_partitions: int = 256,
+    state_bytes: int | None = None,
+    direct_bytes: int = 256 << 20,
+) -> dict[str, object]:
+    """Bounded-memory merge of SKETCH_ROW_SCHEMA rows → {name: merged
+    sketch}. The gate and its knobs are ``gather``'s; for a build's
+    output pass ``state_bytes=state_bytes_hint(*factories)`` (the summed
+    empty-state size of one partition's row group) so wide-state builds
+    take the bounded executor fold even at low partition counts.
+
+    For unusually large per-partition states with no hint available
+    (an unsharded CuckooFilter sized for 10^8+ keys is ~2 B/key PER
+    PARTIAL) pass ``direct_partitions=0``, or better, use
+    ``shard.build_sharded`` (the intended giant-membership path: total
+    state 2 B/key across ALL shards, nothing merges globally)."""
+    rows = gather(
+        sketch_df.select(*_FOLD_COLS),
+        _fold_named_rows,
+        fanout,
+        direct_partitions,
+        state_bytes,
+        direct_bytes,
+    )
+    out: dict[str, object] = {}
+    for r in rows:
+        sk = loads(bytes(r[-1]))
+        if r[0] in out:
+            out[r[0]].merge(sk)
+        else:
+            out[r[0]] = sk
+    return out
+
+
 def tree_merge(
     sketch_df,
     fanout: int = 16,
@@ -129,53 +206,25 @@ def tree_merge(
     state_bytes: int | None = None,
     direct_bytes: int = 256 << 20,
 ):
-    """Full merge → one sketch object on the driver.
+    """Full merge of a one-sketch frame (``build.build_sketches``) →
+    one sketch object on the driver, or None for an empty frame."""
+    merged = merge_sketches(
+        sketch_df, fanout, direct_partitions, state_bytes, direct_bytes
+    )
+    if len(merged) > 1:
+        raise ValueError(
+            f"tree_merge got sketches {sorted(merged)}; use merge_sketches "
+            "for multi-sketch frames"
+        )
+    return next(iter(merged.values()), None)
 
-    Adaptive depth: when the blob frame has ≤ ``direct_partitions``
-    partitions, the executor level is SKIPPED — one ``collect`` of the
-    partition blobs, folded driver-side one at a time. The driver
-    transient is p × state_size (≤ 256 × ~0.5 MB ≈ 128 MB at the
-    flagship's CMS geometry), and the build stage keeps its full scan
-    parallelism because ``collect`` is a plain job over the existing
-    partitions. Measured on the 800k-doc bench corpus (65 blob rows):
-    the level-1 RDD route+partitionBy+fold costs 1.7 s of pure
-    task/python-shuffle overhead where the direct collect-fold costs
-    0.6 s — two extra stages buy nothing until the blob count is large
-    enough that a single driver pull would be GBs.
 
-    Past the threshold (100 TB ⇒ ~10^5-10^6 scan partitions) the
-    two-level shape engages: level 1 routes blobs round-robin to
-    ≤fanout streaming folds executor-side, so the driver never pulls
-    more than fanout blobs.
-
-    ``state_bytes`` makes the gate BYTE-aware: when the caller knows
-    the per-partition state size (``state_bytes_hint(factory)`` —
-    exact for array-backed sketches, no Spark job), the direct path
-    additionally requires p × state_bytes ≤ ``direct_bytes`` (default
-    256 MB of driver transient). Without it the gate counts partitions
-    only, which a 2 MB-wide CMS at the 256-partition threshold turns
-    into a silent ~0.5 GB driver pull — maxResultSize is the loud
-    backstop, but the byte cap avoids tripping it at all. For
-    unusually large per-partition states with no hint available
-    (an unsharded CuckooFilter sized for 10^8+ keys is ~2 B/key PER
-    PARTIAL) pass ``direct_partitions=0``, or better, use
-    ``shard.build_sharded`` (the intended giant-membership path:
-    total state 2 B/key across ALL shards, nothing merges globally)."""
-    p = sketch_df.rdd.getNumPartitions()
-    fits_bytes = state_bytes is None or p * state_bytes <= direct_bytes
-    if p <= direct_partitions and fits_bytes:
-        sk = None
-        for r in _direct_collect(sketch_df.select("state")):
-            other = loads(bytes(r[0]))
-            if sk is None:
-                sk = other
-            else:
-                sk.merge(other)
-        return sk
-    rows = _tree_fold_rdd(sketch_df, fanout).collect()
-    if not rows:
-        return None
-    sk = loads(bytes(rows[0][5]))
-    for r in rows[1:]:
-        sk.merge(loads(bytes(r[5])))
-    return sk
+def tree_merge_df(sketch_df, fanout: int = 16):
+    """Level-1 merge only: p partition rows → ≤fanout rows per name,
+    executor-side, as a SKETCH_ROW_SCHEMA frame."""
+    return sketch_df.sparkSession.createDataFrame(
+        fold_groups_rdd(
+            sketch_df.select(*_FOLD_COLS).rdd, fanout, _fold_named_rows
+        ),
+        SKETCH_ROW_SCHEMA,
+    )

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..config import CuckooConfig
 from ..cuckoo import CuckooFilter
 from ..serde import loads
+from .build import sketch_metrics
 
 SHARD_SCHEMA = (
     "shard_id int, n_rows long, item_count long, fail_count long, "
@@ -217,13 +218,14 @@ def build_sharded(
         for table in resumed.values():
             yield from table.to_batches()
         for sid, f in filters.items():
+            items, fails, load = sketch_metrics(f)
             out = pa.RecordBatch.from_pydict(
                 {
                     "shard_id": [sid],
                     "n_rows": [counts[sid]],
-                    "item_count": [int(getattr(f, "num_items", 0))],
-                    "fail_count": [int(getattr(f, "insert_failures", 0))],
-                    "load_factor": [float(f.load_factor()) if hasattr(f, "load_factor") else 0.0],
+                    "item_count": [items],
+                    "fail_count": [fails],
+                    "load_factor": [load],
                     "state": [f.to_bytes()],
                 },
                 schema=out_schema,
@@ -311,13 +313,14 @@ def delete_sharded(
             return state[_SHARD_COLS]  # untouched shard passes through
         f = loads(state["state"].iloc[0])
         f.delete_batch(dels["key"])
+        items, fails, load = sketch_metrics(f)
         return pd.DataFrame(
             {
                 "shard_id": [int(state["shard_id"].iloc[0])],
                 "n_rows": [int(state["n_rows"].iloc[0])],
-                "item_count": [int(getattr(f, "num_items", 0))],
-                "fail_count": [int(getattr(f, "insert_failures", 0))],
-                "load_factor": [float(f.load_factor()) if hasattr(f, "load_factor") else 0.0],
+                "item_count": [items],
+                "fail_count": [fails],
+                "load_factor": [load],
                 "state": [f.to_bytes()],
             }
         )
@@ -341,15 +344,14 @@ def merge_sharded(shard_df: DataFrame) -> DataFrame:
         f = loads(pdf["state"].iloc[0])
         for blob in pdf["state"].iloc[1:]:
             f.merge(loads(blob))
+        items, fails, load = sketch_metrics(f)
         return pd.DataFrame(
             {
                 "shard_id": [int(pdf["shard_id"].iloc[0])],
                 "n_rows": [int(pdf["n_rows"].sum())],
-                "item_count": [int(getattr(f, "num_items", 0))],
-                "fail_count": [int(getattr(f, "insert_failures", 0))],
-                "load_factor": [
-                    float(f.load_factor()) if hasattr(f, "load_factor") else 0.0
-                ],
+                "item_count": [items],
+                "fail_count": [fails],
+                "load_factor": [load],
                 "state": [f.to_bytes()],
             }
         )

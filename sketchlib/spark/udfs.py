@@ -198,10 +198,10 @@ def cms_heavy_hitters(
     candidate list (Metwally et al., SpaceSaving, ICDT'05). Counts in
     the dict only RANK candidates — the CMS supplies the final
     estimates, so floor inflation never reaches the output. Partial
-    rows then merge like every other sketch frame:
-    ≤ ``merge.tree_merge``'s direct threshold → one collect + driver
-    fold; above it → ``merge.fold_groups_rdd`` streaming executor
-    folds (the groupBy().applyInPandas shape merge.py documents as the
+    rows then merge through ``merge.gather``, the gate every sketch
+    frame uses: ≤ its direct threshold → one collect + driver fold;
+    above it → ``merge.fold_groups_rdd`` streaming executor folds
+    (the groupBy().applyInPandas shape merge.py documents as the
     multi-blob materialization anti-pattern is exactly what this
     replaced). Rows shuffled: ≤fanout × (state + candidate list) —
     k-scale, not data-scale.
@@ -269,7 +269,8 @@ def cms_heavy_hitters(
     def _fold_partial_rows(rows):
         """Streaming per-row fold of (part_id, cand, state) tuples —
         one running (cms, cand-set) per group, one incoming blob
-        resident at a time (same memory contract as merge._fold_rows)."""
+        resident at a time (same memory contract as
+        merge._fold_named_rows)."""
         cms = None
         cands: set = set()
         part_id = 0
@@ -284,17 +285,9 @@ def cms_heavy_hitters(
         if cms is not None:
             yield (part_id, sorted(cands), cms.to_bytes())
 
-    from .merge import _direct_collect, fold_groups_rdd
+    from .merge import gather
 
-    p = partials.rdd.getNumPartitions()
-    if p <= 256:  # same crossover as merge.tree_merge
-        rows = _direct_collect(partials.select("part_id", "cand", "state"))
-    else:
-        rows = fold_groups_rdd(
-            partials.select("part_id", "cand", "state").rdd,
-            min(fanout, p),
-            _fold_partial_rows,
-        ).collect()
+    rows = gather(partials, _fold_partial_rows, fanout)
     if not rows:
         return []
     cms = loads(bytes(rows[0][2]))

@@ -128,7 +128,10 @@ class IncrementalSketchBuilder:
         after, so a checkpoint that crashed mid-first-batch (state
         written, commit not) still shows its numbering here — checking
         commits would disarm the replay guard in exactly the
-        at-least-once crash window it exists for. URI checkpoints are
+        at-least-once crash window it exists for. Only a MISSING
+        ``offsets`` dir reads as fresh: any other error (permissions, a
+        flaky store) returns True, keeping the replay guard armed
+        rather than silently disarming it. URI checkpoints are
         inspected through the session's Hadoop FS when a session is
         available; without one they return False (fresh-dir side)."""
         base = checkpoint_dir
@@ -147,17 +150,19 @@ class IncrementalSketchBuilder:
                 )
                 if not fs.exists(off):
                     return False
-                for st in fs.listStatus(off):
-                    if not st.getPath().getName().startswith("."):
-                        return True
+                return any(
+                    not st.getPath().getName().startswith(".")
+                    for st in fs.listStatus(off)
+                )
             except Exception:
-                return False
-            return False
+                return True
         offsets = os.path.join(base, "offsets")
         try:
             return any(not e.startswith(".") for e in os.listdir(offsets))
-        except OSError:
+        except FileNotFoundError:
             return False
+        except OSError:
+            return True
 
     def attach(self, stream_df, checkpoint_dir: str, trigger_once: bool = True):
         # stamp the lineage so the replay guard is scoped to THIS

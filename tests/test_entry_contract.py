@@ -90,3 +90,27 @@ def test_entry_runs(spark):
 def test_query_returns_rows(spark, name):
     fn = entry_mod.queries()[name]
     assert fn(spark, SF).count() > 0
+
+
+def test_sharded_index_cache_evicts_oldest(spark, monkeypatch):
+    """A full sharded-index cache must evict its OLDEST entry. Evicting
+    the newest destroyed the broadcast behind the lazy frame the
+    previous call had just returned."""
+
+    class StubIndex:
+        destroyed = False
+
+        def destroy(self):
+            self.destroyed = True
+
+    stubs = [StubIndex() for _ in range(4)]
+    cache = {("older-app", i): s for i, s in enumerate(stubs)}
+    monkeypatch.setattr(entry_mod, "_SHARDED_IDX_CACHE", cache)
+    out = entry_mod.q_sharded_membership(spark, SF)
+    try:
+        assert stubs[0].destroyed
+        assert not any(s.destroyed for s in stubs[1:])
+        assert len(cache) == 4 and ("older-app", 0) not in cache
+        assert out.where("member").count() > 0
+    finally:
+        cache[(spark.sparkContext.applicationId, SF)].destroy()

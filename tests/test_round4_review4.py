@@ -1,7 +1,6 @@
-"""Regression tests for the ninth review pass: the blob merges must
+"""Regression tests for the ninth review pass: the blob merge must
 stream per-ROW (not per-arrow-batch, not per-group), the KLL parity
-coin must stay decorrelated on clamped/saturated data, the checkpointed
-job's tokenizer must match the fused path on Unicode whitespace, and
+coin must stay decorrelated on clamped/saturated data, and
 partition_sizes must not ship row payloads just to count them."""
 
 from __future__ import annotations
@@ -42,7 +41,7 @@ def _liveness_rows(n_rows_total: int, make_blob, alive):
         )
         b = _Blob(make_blob(i))
         alive.append(weakref.ref(b))
-        yield (i, 10, b)
+        yield ("hll", i, 10, b)
 
 
 def test_tree_merge_streams_one_blob_at_a_time(spark):
@@ -56,7 +55,7 @@ def test_tree_merge_streams_one_blob_at_a_time(spark):
     still referenced."""
     from sketchlib.sketches import HyperLogLog
     from sketchlib.spark import build_sketches, tree_merge
-    from sketchlib.spark.merge import _fold_rows
+    from sketchlib.spark.merge import _fold_named_rows
 
     alive = []
 
@@ -65,9 +64,9 @@ def test_tree_merge_streams_one_blob_at_a_time(spark):
         sk.update([f"u{i}-{j}" for j in range(10)])
         return sk.to_bytes()
 
-    out = list(_fold_rows(_liveness_rows(64, make, alive)))
+    out = list(_fold_named_rows(_liveness_rows(64, make, alive)))
     assert len(out) == 1
-    assert out[0][1] == 640  # n_rows summed
+    assert out[0][2] == 640  # n_rows summed
     assert len(alive) == 64  # generator fully consumed
 
     # end-to-end: the distributed result still matches a driver fold
@@ -91,11 +90,8 @@ def test_merge_web_sketches_fold_is_per_row(spark, docs_df):
     order-independent sketches."""
     from sketchlib.serde import loads
     from sketchlib.sketches import HyperLogLog
-    from sketchlib.spark.webbuild import (
-        _fold_blob_rows,
-        build_web_sketches,
-        merge_web_sketches,
-    )
+    from sketchlib.spark.merge import _fold_named_rows
+    from sketchlib.spark.webbuild import build_web_sketches, merge_web_sketches
 
     alive = []
 
@@ -105,9 +101,9 @@ def test_merge_web_sketches_fold_is_per_row(spark, docs_df):
         return sk.to_bytes()
 
     rows = (
-        ("hll", pid, 5, blob) for pid, _ten, blob in _liveness_rows(8, make, alive)
+        (name, pid, 5, blob) for name, pid, _ten, blob in _liveness_rows(8, make, alive)
     )
-    out = list(_fold_blob_rows(rows))
+    out = list(_fold_named_rows(rows))
     assert len(out) == 1 and out[0][0] == "hll" and out[0][2] == 40
     assert len(alive) == 8
 
@@ -174,37 +170,6 @@ def test_kll_coins_decorrelated_on_clamped_data():
         "clamped-data partitions share parity sequences: boundary-collapse "
         f"regression ({len(prefixes)} distinct of 8)"
     )
-
-
-# --------------------------------------- checkpointed-job tokenizer parity
-
-
-def test_checkpointed_tokenizer_matches_arrow_whitespace(spark):
-    """The checkpointed CMS branch tokenizes with Java regex; the fused
-    branch with Arrow utf8_split_whitespace. Both must split on the
-    UNICODE whitespace set or fixed/cms.bin counts differ depending on
-    whether --checkpoint was passed — U+00A0 (the residue of &nbsp; in
-    scraped HTML) is the canonical divergence: Java \\s is ASCII-only
-    without (?U)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    texts = [
-        "caf\u00e9\u00a0menu",  # NBSP between tokens
-        "a\u2003b\u3000c",  # em space, ideographic space
-        " plain  ascii\ttokens\n",
-        "",
-    ]
-    # the exact expression web_build_job.py uses (keep in sync)
-    expr = "regexp_extract_all(coalesce(text,''), '(?U)\\\\S+', 0)"
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = [r[0] for r in df.select(F.expr(expr)).collect()]
-
-    arrow = pc.list_flatten(pc.utf8_split_whitespace(pa.array([t or "" for t in texts])))
-    arrow_tokens = [t for t in arrow.to_pylist() if t != ""]
-    java_tokens = [t for row in got for t in row]
-    assert java_tokens == arrow_tokens
-    assert got[0] == ["caf\u00e9", "menu"]
 
 
 # ----------------------------------------------- partition_sizes projection

@@ -103,9 +103,10 @@ def test_merge_web_sketches_direct_skips_executor_level(spark, docs_df, monkeypa
     def boom(*a, **kw):  # pragma: no cover - failure path
         raise AssertionError("executor level ran below direct_partitions")
 
-    # merge_web_sketches imports fold_groups_rdd from .merge at call time
+    # merge_web_sketches is merge.merge_sketches: it looks fold_groups_rdd
+    # up in merge's globals, so patching merge_mod suffices
     monkeypatch.setattr(merge_mod, "fold_groups_rdd", boom)
-    assert webbuild  # module present; import-at-call means merge_mod patch suffices
+    assert webbuild.merge_web_sketches is merge_mod.merge_sketches
     partials = build_web_sketches(docs_df.repartition(4), _hll_cms_factories())
     merged = merge_web_sketches(partials)
     assert set(merged) == {"hll", "cms"}

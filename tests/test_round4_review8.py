@@ -53,7 +53,8 @@ def test_checkpoint_meta_same_build_resumes(spark, tmp_path):
     b = build_sketches(df, "key", lambda: HyperLogLog(10), checkpoint_dir=ck).collect()
     assert sorted(bytes(r.state) for r in a) == sorted(bytes(r.state) for r in b)
     meta = json.loads((tmp_path / "ck3" / "_meta.json").read_text())
-    assert meta["kind"] == "HyperLogLog" and meta["partitions"] == 4
+    assert meta["sketches"] == {"key": ["HyperLogLog", 0, "values"]}
+    assert meta["partitions"] == 4
 
 
 def test_read_pages_rejects_snapshot_on_parquet(spark, tmp_path):

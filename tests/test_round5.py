@@ -600,3 +600,33 @@ def test_checkpoint_has_batches_uri_via_session(spark, tmp_path):
     (ckpt / "offsets" / "3").write_text("v1")
     assert has(uri, spark) is True
     assert has(f"file://{tmp_path}/nope", spark) is False
+
+
+def test_checkpoint_has_batches_local_error_keeps_guard_armed(tmp_path, monkeypatch):
+    """Only a MISSING offsets dir reads as fresh; an unreadable one
+    (PermissionError) must keep the replay guard armed, not disarm it."""
+    import sketchlib.streaming.incremental as inc
+
+    ckpt = tmp_path / "c"
+    (ckpt / "offsets").mkdir(parents=True)
+
+    def denied(path):
+        raise PermissionError(13, "Permission denied", path)
+
+    monkeypatch.setattr(inc.os, "listdir", denied)
+    assert inc.IncrementalSketchBuilder._checkpoint_has_batches(str(ckpt)) is True
+
+
+def test_checkpoint_has_batches_uri_error_keeps_guard_armed(spark, monkeypatch):
+    """URI branch: a Hadoop FS error other than 'offsets missing' keeps
+    the replay guard armed. The FS is stubbed, so nothing is contacted."""
+    import sketchlib.spark.fsio as fsio
+    from sketchlib.streaming.incremental import IncrementalSketchBuilder
+
+    class DeniedFS:
+        def exists(self, path):
+            raise PermissionError("Permission denied")
+
+    monkeypatch.setattr(fsio, "_fs_path", lambda session, path: (DeniedFS(), path))
+    has = IncrementalSketchBuilder._checkpoint_has_batches
+    assert has("hdfs://namenode/ckpt", spark) is True

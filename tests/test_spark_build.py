@@ -274,6 +274,77 @@ def test_checkpoint_resume(spark, docs_df, tmp_path):
     assert merged1.to_bytes() == merged2.to_bytes()
 
 
+def test_web_checkpoint_resume_reemits_published_rows(spark, docs_df, tmp_path):
+    """build_web_sketches(checkpoint_dir=...) publishes one row group
+    per partition; a rerun re-emits those rows byte-identically without
+    folding — proven by resuming over DIFFERENT text (same columns and
+    partition count), which a re-fold would turn into different
+    states."""
+    from sketchlib.spark.checkpoint import completed_partitions
+    from sketchlib.spark.webbuild import build_web_sketches
+
+    ckpt = str(tmp_path / "web")
+    factories = {
+        "hll": lambda: HyperLogLog(12),
+        "cms": lambda: CountMinSketch(width=1 << 10, depth=4),
+        "kll": lambda: KLLSketch(200),
+    }
+    docs = docs_df.select("url", "text").repartition(4)
+    first = sorted(build_web_sketches(docs, factories, checkpoint_dir=ckpt).collect())
+    assert completed_partitions(ckpt) == [0, 1, 2, 3]
+    other = docs.withColumn("text", F.lit("zzz")).withColumn("url", F.lit("u"))
+    again = sorted(build_web_sketches(other, factories, checkpoint_dir=ckpt).collect())
+    assert again == first
+    assert {r.sketch for r in first} == set(factories)
+
+
+def test_checkpoint_dir_of_old_row_layout_rejected(spark, docs_df, tmp_path):
+    """A dir published by the earlier unnamed 6-column build_sketches
+    must be refused on the driver by its fingerprint — re-emitting its
+    files would break inside mapInArrow on the 7-column schema."""
+    import json
+
+    ckpt = tmp_path / "old"
+    ckpt.mkdir()
+    (ckpt / "_meta.json").write_text(
+        json.dumps(
+            {
+                "op": "build_sketches",
+                "kind": "HyperLogLog",
+                "key_col": "key",
+                "numeric": False,
+                "partitions": 4,
+            }
+        )
+    )
+    urls = docs_df.select(F.col("url").alias("key")).repartition(4)
+    with pytest.raises(ValueError, match="different build"):
+        build_sketches(urls, "key", lambda: HyperLogLog(12), checkpoint_dir=str(ckpt))
+
+
+def test_web_build_job_checkpoint_matches_fused(spark, docs_parquet, tmp_path):
+    """jobs/web_build_job.py: --checkpoint only makes the fused build
+    resumable — fixed sketches are byte-identical with and without it,
+    and on the resumed rerun."""
+    import argparse
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "..", "jobs", "web_build_job.py")
+    spec = importlib.util.spec_from_file_location("web_build_job", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    docs = spark.read.parquet(docs_parquet)
+    ckpt = str(tmp_path / "ckpt")
+    runs = [
+        job._build_fixed(docs, argparse.Namespace(cms_width=4096, checkpoint=c))
+        for c in (None, ckpt, ckpt)
+    ]
+    for name in ("hll", "cms", "kll"):
+        assert len({r[name].to_bytes() for r in runs}) == 1, name
+
+
 def test_lineage_manifest(tmp_path):
     from sketchlib.spark.checkpoint import mark_stage_done, stage_done
 

@@ -132,10 +132,10 @@ def test_spark_submit_warc_ingest_job(tmp_path):
     not os.path.exists(SPARK_SUBMIT), reason="spark-submit not installed"
 )
 def test_spark_submit_web_build_job(tmp_path):
-    """web_build_job E2E through spark-submit, CHECKPOINTED path: the
-    resumable branch must honor the same fixed/{hll,cms,kll}.bin
-    contract as the fused path (a prior version silently dropped
-    cms.bin when --checkpoint was given), and every sidecar artifact
+    """web_build_job E2E through spark-submit with --checkpoint: the
+    resumable build must honor the full fixed/{hll,cms,kll}.bin
+    contract (a prior version silently dropped cms.bin when
+    --checkpoint was given), and every sidecar artifact
     must land under --output via the Hadoop FS writer (metrics.json,
     fixed/*.bin), not on the driver's local cwd."""
     import pyarrow.parquet as pq
@@ -173,7 +173,7 @@ def test_spark_submit_web_build_job(tmp_path):
     assert res["rows"] == n
     assert res["cuckoo_items"] == n  # urls are unique in the fixture
     assert res["cuckoo_failures"] == 0
-    # full three-sketch contract on the checkpointed branch
+    # full three-sketch contract with --checkpoint
     for name in ("hll", "cms", "kll"):
         blob = (tmp_path / "out" / "fixed" / f"{name}.bin").read_bytes()
         assert len(blob) > 0
