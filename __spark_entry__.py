@@ -218,6 +218,11 @@ def q_cuckoo_membership(spark, sf_dir):
     return keys.withColumn("m", member("key")).where("m").select("key")
 
 
+# q_cuckoo_delete's driver-collect ceiling: past this many delete keys
+# the query refuses instead of pulling the set into driver memory
+_DRIVER_DELETE_KEYS_MAX = 5_000_000
+
+
 def q_cuckoo_delete(spark, sf_dir):
     """Cuckoo delete (SURVEY §2.1 #5,#12): insert distinct orderkeys,
     delete every key having an 'R' lineitem, probe the kept set.
@@ -225,8 +230,11 @@ def q_cuckoo_delete(spark, sf_dir):
     NOTE: this is the SCALAR Delete API demo (reference
     internal/filter/filter.go Delete) — the delete set is collected to
     the driver by design, because a single merged filter's state lives
-    in one place. The data-scale path is `sharded_delete`, where
-    deletes route executor-side with no driver collection."""
+    in one place. The collect is capped at ``_DRIVER_DELETE_KEYS_MAX``
+    keys: past it the query raises a ValueError naming
+    ``shard.delete_sharded`` (the `sharded_delete` query), the
+    data-scale path where deletes route executor-side with no driver
+    collection."""
     from sketchlib import CuckooFilter
     from sketchlib.spark import build_sketches, membership_udf, tree_merge
 
@@ -244,7 +252,16 @@ def q_cuckoo_delete(spark, sf_dir):
         build_sketches(keys, "key", lambda: CuckooFilter(cfg))
     )
     assert merged.insert_failures == 0  # sized to the keyset: loud if not
-    merged.delete_batch([r.key for r in deleted.collect()])
+    # limit: the guard itself never pulls more than one key past the cap
+    dels = deleted.limit(_DRIVER_DELETE_KEYS_MAX + 1).collect()
+    if len(dels) > _DRIVER_DELETE_KEYS_MAX:
+        raise ValueError(
+            f"cuckoo_delete collects its delete keys to the driver; more "
+            f"than {_DRIVER_DELETE_KEYS_MAX:,} is past that scale — use "
+            "sketchlib.spark.shard.delete_sharded (executor-side deletes "
+            "against a sharded filter, no driver collect)"
+        )
+    merged.delete_batch([r.key for r in dels])
     member = membership_udf(spark, merged)
     return kept.withColumn("m", member("key")).where("m").select("key")
 

@@ -4,9 +4,12 @@ A single merged filter needs global geometry in every task (2 bytes ×
 total slots), which stops scaling around 10^9 capacity. Sharding keeps
 per-task memory constant at any scale:
 
-* build: repartition rows by ``pmod(xxhash64(key), num_shards)``; each
-  shard builds ONE filter of capacity/num_shards (mapInArrow fold);
-  the result table (shard_id, state, metrics) is the filter.
+* build: shard id = ``pmod(xxhash64(key), num_shards)``; rows route by
+  shard id (``repartitionById``) onto min(num_shards, shuffle
+  partitions) tasks, sorted by shard id, and each task folds its
+  shards one at a time — ONE filter of capacity/num_shards resident
+  per task (mapInArrow fold); the result table (shard_id, state,
+  metrics) is the filter.
 * probe: zero-shuffle broadcast lookup while total state fits the
   broadcast budget (blobs broadcast once per executor, probes answered
   on their scan partitions); above it, a cogroup on shard_id — probes
@@ -41,67 +44,6 @@ def _shard_col(key_col: str, num_shards: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_shards)).cast("int")
 
 
-# shard routing keys are a pure function of (num_shards) — Spark's
-# murmur3 is fixed — so the tiny discovery job runs once per size
-_ROUTE_KEYS: dict[int, list[int]] = {}
-
-
-def _identity_route_keys(spark, n: int) -> list[int]:
-    """Routing keys k_0..k_{n-1} with ``pmod(hash(k_i), n) == i``.
-
-    ``repartition(n, "shard_id")`` hash-partitions the shard id with
-    murmur3, which is NOT the identity: several shards collide into one
-    task while others sit empty, so a task holds 2-3 full per-shard
-    filters at once — breaking the 'exactly one task per shard /
-    per-task memory = one shard' contract this module exists for.
-    Routing through a key whose murmur3 pmod IS the shard id restores
-    the 1:1 layout. Keys are discovered with one tiny driver job
-    (coupon-collector over spark.range; murmur3 evaluated by Spark
-    itself so it can never drift from the engine's partitioner)."""
-    cached = _ROUTE_KEYS.get(n)
-    if cached is not None:
-        return cached
-    found: dict[int, int] = {}
-    start, step = 0, max(64 * n, 1024)
-    while len(found) < n:
-        # engine-side reduction: min(id) per residue, so the driver
-        # collects AT MOST n rows per round instead of the whole 64·n
-        # probe window (at 10^5 shards that was ~6.4M longs pulled to
-        # the driver once per session). min-of-window == the
-        # first-encountered id of the old scan, so the discovered keys
-        # are unchanged.
-        rows = (
-            spark.range(start, start + step)
-            .select(F.pmod(F.hash("id"), F.lit(n)).alias("p"), F.col("id"))
-            .groupBy("p")
-            .agg(F.min("id").alias("id"))
-            .collect()
-        )
-        for r in rows:
-            found.setdefault(int(r.p), int(r.id))
-        start += step
-    keys = [found[i] for i in range(n)]
-    _ROUTE_KEYS[n] = keys
-    return keys
-
-
-def _route_by_shard(keyed: DataFrame, num_shards: int) -> DataFrame:
-    """Exchange into EXACTLY one partition per shard (see
-    _identity_route_keys); the helper column is dropped after."""
-    route = _identity_route_keys(keyed.sparkSession, num_shards)
-    mapping = F.create_map(
-        *[x for i, k in enumerate(route) for x in (F.lit(i), F.lit(k))]
-    )
-    return (
-        # cast matters: murmur3 hashes int32 and int64 differently, and
-        # the discovery job hashed LONGs (spark.range ids) — an int32
-        # literal here would re-collide the routing
-        keyed.withColumn("_route", mapping[F.col("shard_id").cast("int")].cast("long"))
-        .repartition(num_shards, "_route")
-        .drop("_route")
-    )
-
-
 def build_sharded(
     df: DataFrame,
     key_col: str,
@@ -110,7 +52,15 @@ def build_sharded(
     factory=None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """→ one row per shard (SHARD_SCHEMA). Exactly one task per shard.
+    """→ one row per shard (SHARD_SCHEMA). One shard resident per task.
+
+    Rows route by shard id with ``repartitionById`` onto
+    ``min(num_shards, spark.sql.shuffle.partitions)`` tasks (shard id
+    modulo tasks) and sort by shard id within each task. Each task
+    folds its shards one run at a time: at every shard-id change it
+    emits the finished shard's row and drops that filter before
+    building the next, so per-task memory is one shard's filter while
+    the task count follows cores, not shards.
 
     ``factory``: optional zero-arg callable building the per-shard
     sketch (any membership sketch with update/lookup_batch-or-contains);
@@ -119,12 +69,11 @@ def build_sharded(
     shard count, the property that makes this the 10^12-key path.
 
     ``checkpoint_dir``: per-shard resume lineage (north rule), same
-    contract as build_sketches — each task atomically publishes its
+    contract as build_sketches — each task atomically publishes every
     finished shard row (``shard-{id}.arrow``); a resumed run re-emits
     published rows instead of re-folding those shards. Valid because
-    the shard→rows assignment is the build's own hash partitioner
-    (stable for a given key set and num_shards, unlike scan-partition
-    ids)."""
+    the shard→rows assignment is the key hash (stable for a given key
+    set and num_shards, unlike scan-partition ids)."""
     if factory is None:
         if cfg is None:
             raise ValueError("need cfg or factory")
@@ -137,13 +86,15 @@ def build_sharded(
             seed=cfg.seed,
         )
         factory = lambda: CuckooFilter(shard_cfg)  # noqa: E731
-    keyed = df.select(F.col(key_col).alias("key")).withColumn(
-        "shard_id", _shard_col("key", num_shards)
+    spark = df.sparkSession
+    tasks = min(num_shards, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    # one shuffle: every shard's rows land in one task, as one sorted run
+    keyed = (
+        df.select(F.col(key_col).alias("key"))
+        .withColumn("shard_id", _shard_col("key", num_shards))
+        .repartitionById(tasks, "shard_id")
+        .sortWithinPartitions("shard_id")
     )
-    # one shuffle, EXACTLY one partition per shard (identity routing —
-    # plain repartition on shard_id murmur3-collides shards into shared
-    # tasks, multiplying per-task filter memory; see _identity_route_keys)
-    keyed = _route_by_shard(keyed, num_shards)
 
     if checkpoint_dir:
         # shard→rows assignment is the key hash (stable across input
@@ -152,7 +103,7 @@ def build_sharded(
         from .checkpoint import ensure_checkpoint_meta
 
         ensure_checkpoint_meta(
-            df.sparkSession,
+            spark,
             checkpoint_dir,
             {
                 "op": "build_sharded",
@@ -163,6 +114,10 @@ def build_sharded(
         )
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import uuid
+
+        import numpy as np
+
         from . import taskfs
 
         out_schema = pa.schema(
@@ -175,10 +130,6 @@ def build_sharded(
                 ("state", pa.binary()),
             ]
         )
-        filters: dict[int, CuckooFilter] = {}
-        counts: dict[int, int] = {}
-        resumed: dict[int, pa.Table] = {}
-
         # executor-side IO via pyarrow.fs (tasks have no JVM; os.path on
         # an hdfs://-s3a:// dir writes executor-LOCAL files and resume
         # silently never fires) — see sketchlib/spark/taskfs.py
@@ -186,43 +137,12 @@ def build_sharded(
         if checkpoint_dir:
             ck_fs, ck_base = taskfs.task_fs(checkpoint_dir)
 
-        def ckpt_path(sid: int) -> str:
-            return f"{ck_base.rstrip('/')}/shard-{sid:06d}.arrow"
-
-        for rb in batches:
-            keys = rb.column("key")
-            shards = rb.column("shard_id").to_numpy()
-            # a task normally owns one shard; group defensively anyway
-            import numpy as np
-
-            for sid in np.unique(shards):
-                sid_i = int(sid)
-                if checkpoint_dir and sid_i not in resumed and sid_i not in filters:
-                    p = ckpt_path(sid_i)
-                    if taskfs.exists(ck_fs, p):
-                        resumed[sid_i] = taskfs.read_ipc_table(ck_fs, p)
-                if sid_i in resumed:
-                    continue  # shard already published: skip the fold
-                mask = shards == sid
-                # NOT setdefault(sid_i, factory()): setdefault evaluates
-                # its default eagerly, allocating (and discarding) a
-                # full-size filter table per Arrow batch on the hot path
-                f = filters.get(sid_i)
-                if f is None:
-                    f = filters[sid_i] = factory()
-                # factory protocol: cuckoo-style insert_batch, else the
-                # MergeableSketch update (Bloom/HLL/... shard the same way)
-                ins = getattr(f, "insert_batch", None) or f.update
-                ins(keys.filter(pa.array(mask)))
-                counts[sid_i] = counts.get(sid_i, 0) + int(mask.sum())
-        for table in resumed.values():
-            yield from table.to_batches()
-        for sid, f in filters.items():
+        def finish(sid: int, f, n: int) -> pa.RecordBatch:
             items, fails, load = sketch_metrics(f)
             out = pa.RecordBatch.from_pydict(
                 {
                     "shard_id": [sid],
-                    "n_rows": [counts[sid]],
+                    "n_rows": [n],
                     "item_count": [items],
                     "fail_count": [fails],
                     "load_factor": [load],
@@ -231,8 +151,6 @@ def build_sharded(
                 schema=out_schema,
             )
             if checkpoint_dir:
-                import uuid
-
                 # attempt-unique tmp + move = atomic publish; identical
                 # bytes per attempt make last-writer-wins safe; dead
                 # attempts' orphaned tmps are GC'd inside
@@ -244,7 +162,35 @@ def build_sharded(
                     out_schema,
                     out,
                 )
-            yield out
+            return out
+
+        # run-length fold: rows arrive sorted by shard id, so a shard is
+        # one contiguous run that may span batches
+        sid, f, n = None, None, 0
+        for rb in batches:
+            shards = rb.column("shard_id").to_numpy()
+            starts = np.flatnonzero(np.diff(shards, prepend=-1)).tolist()
+            for lo, hi in zip(starts, [*starts[1:], len(shards)]):
+                if int(shards[lo]) != sid:
+                    if f is not None:
+                        yield finish(sid, f, n)
+                    f = None  # drop the finished filter before factory()
+                    sid, n = int(shards[lo]), 0
+                    done = ck_base and f"{ck_base.rstrip('/')}/shard-{sid:06d}.arrow"
+                    if done and taskfs.exists(ck_fs, done):
+                        # shard already published: re-emit, skip its run
+                        yield from taskfs.read_ipc_table(ck_fs, done).to_batches()
+                    else:
+                        f = factory()
+                if f is not None:
+                    # factory protocol: cuckoo-style insert_batch, else the
+                    # MergeableSketch update (Bloom/HLL/... shard the same way)
+                    (getattr(f, "insert_batch", None) or f.update)(
+                        rb.column("key").slice(lo, hi - lo)
+                    )
+                    n += hi - lo
+        if f is not None:
+            yield finish(sid, f, n)
 
     return keyed.mapInArrow(fold, SHARD_SCHEMA)
 

@@ -114,3 +114,24 @@ def test_sharded_index_cache_evicts_oldest(spark, monkeypatch):
         assert out.where("member").count() > 0
     finally:
         cache[(spark.sparkContext.applicationId, SF)].destroy()
+
+
+def test_cuckoo_delete_driver_collect_guard(spark, monkeypatch):
+    """cuckoo_delete collects its delete set to the driver: past the cap
+    it must refuse loudly and name the executor-side delete_sharded,
+    not pull an unbounded key set into driver memory."""
+    from pyspark.sql import functions as F
+
+    n = (
+        spark.read.parquet(f"{SF}/lineitem.parquet")
+        .where("l_returnflag = 'R'")
+        .select(F.col("l_orderkey").cast("string"))
+        .distinct()
+        .count()
+    )
+    assert n > 1
+    monkeypatch.setattr(entry_mod, "_DRIVER_DELETE_KEYS_MAX", n)
+    assert entry_mod.q_cuckoo_delete(spark, SF).count() > 0  # at the cap: runs
+    monkeypatch.setattr(entry_mod, "_DRIVER_DELETE_KEYS_MAX", n - 1)
+    with pytest.raises(ValueError, match="delete_sharded"):
+        entry_mod.q_cuckoo_delete(spark, SF)

@@ -141,6 +141,27 @@ def test_flagship_sharded_counts_and_probes_agree(flagship):
     assert lc["hll_estimate"] == flagship["local"]["hll_estimate"]
 
 
+def test_sharded_64_shards_under_local_cluster(docs_parquet, tmp_path):
+    """64 shards on the job's 8 shuffle partitions: each task folds 8
+    shards in turn, across executor JVMs. Zero insert failures, every
+    inserted url found, and the shard→count map equal to local[4]."""
+    res = {}
+    for tag, master in (("local", "local[4]"), ("cluster", LC_MASTER)):
+        out = str(tmp_path / f"{tag}.json")
+        _run_job(
+            ["--master", master, "--mode", "sharded", "--docs", docs_parquet,
+             "--out", out, "--num-shards", "64"]
+        )
+        with open(out) as fh:
+            res[tag] = json.load(fh)
+    lc, l4 = res["cluster"], res["local"]
+    assert lc["executors_plus_driver"] >= 3
+    assert len(lc["shards"]) == 64
+    assert all(v[2] == 0 for v in lc["shards"].values())  # no insert failures
+    assert lc["probe_hits"] == lc["n"] == l4["probe_hits"] == l4["n"]
+    assert lc["shards"] == l4["shards"]
+
+
 def test_checkpoint_kill_resume_under_local_cluster(docs_parquet, tmp_path):
     """The taskfs contract, end to end under multi-JVM: executor tasks
     publish per-shard checkpoint files via pyarrow.fs; a SIGKILLed

@@ -1,50 +1,118 @@
 """Round-4 seventh-pass regressions (review of __spark_entry__, shard,
-streaming incremental/stateful): identity shard routing, lazy filter
+streaming incremental/stateful): shard routing, lazy filter
 construction, worker-level probe deser cache, lineage-scoped replay
 guard, real timeout eviction, required value_col."""
 
 from __future__ import annotations
+
+import json
+import weakref
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 
-# ---------------------------------------------------- identity routing
+# ------------------------------------------------------- shard routing
 
 
-def test_identity_route_keys_invert_murmur3(spark):
-    from sketchlib.spark.shard import _identity_route_keys
+class _RunRecorder:
+    """Per-shard sketch stand-in whose state records where and in which
+    order it was folded: (task partition, fold order in the task, keys)."""
 
-    for n in (4, 8, 64):
-        keys = _identity_route_keys(spark, n)
-        assert len(keys) == n
-        got = (
-            spark.createDataFrame([(i, k) for i, k in enumerate(keys)], "i int, k long")
-            .select("i", F.pmod(F.hash("k"), F.lit(n)).alias("p"))
-            .collect()
-        )
-        assert all(r.p == r.i for r in got)
+    def __init__(self, seq: int):
+        self.seq = seq
+        self.keys: list[str] = []
+
+    def update(self, keys):
+        self.keys.extend(keys.to_pylist())
+
+    def to_bytes(self) -> bytes:
+        from pyspark import TaskContext
+
+        return json.dumps([TaskContext.get().partitionId(), self.seq, self.keys]).encode()
+
+
+def _one_live_factory():
+    """Factory that fails if a sketch it made earlier in the same task
+    is still alive (the closure's list is unpickled fresh per task)."""
+    made: list = []
+
+    def factory():
+        live = [w for w in made if w() is not None]
+        if live:
+            raise AssertionError(f"{len(live)} earlier shard sketch(es) still alive")
+        f = _RunRecorder(len(made))
+        made.append(weakref.ref(f))
+        return f
+
+    return factory
 
 
 def test_build_sharded_one_shard_per_task(spark):
-    """The build exchange must land EXACTLY one shard per partition:
-    plain repartition(n, shard_id) murmur3-collides shards into shared
-    tasks (2-3 full filters resident at once) while other tasks idle."""
-    from sketchlib.spark.shard import _route_by_shard, _shard_col
+    """Shards route by id onto min(num_shards, shuffle partitions) tasks:
+    each shard id lands in exactly one partition (id modulo tasks), each
+    task sees its shards as sorted runs and folds them one at a time —
+    never two live filters in one task. Small Arrow batches make runs
+    span batch boundaries."""
+    from sketchlib.spark.shard import _shard_col, build_sharded
 
-    n = 8
-    keyed = (
-        spark.range(2000)
-        .select(F.concat(F.lit("k"), F.col("id")).alias("key"))
-        .withColumn("shard_id", _shard_col("key", n))
-    )
-    routed = _route_by_shard(keyed, n)
-    per_part = routed.rdd.mapPartitions(
-        lambda it: [len({r.shard_id for r in it})]
-    ).collect()
-    assert len(per_part) == n
-    assert all(c == 1 for c in per_part), per_part  # exactly 1:1, none empty
+    keys = spark.range(2000).select(F.concat(F.lit("k"), F.col("id")).alias("key"))
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    batch = spark.conf.get(batch_conf)
+    spark.conf.set(batch_conf, "37")
+    try:
+        for n in (3, 16):  # fewer shards than shuffle partitions, and more
+            want: dict[int, set] = {}
+            for r in keys.select("key", _shard_col("key", n).alias("s")).collect():
+                want.setdefault(r.s, set()).add(r.key)
+            tasks = min(n, int(spark.conf.get("spark.sql.shuffle.partitions")))
+            built = build_sharded(keys, "key", n, factory=_one_live_factory())
+            assert built.rdd.getNumPartitions() == tasks
+            rows = built.collect()
+            assert sorted(r.shard_id for r in rows) == sorted(want)  # one row per shard
+            runs: dict[int, list[tuple[int, int]]] = {}
+            for r in rows:
+                pid, seq, got = json.loads(r.state)
+                assert pid == r.shard_id % tasks  # exactly one partition per shard
+                assert set(got) == want[r.shard_id] and len(got) == r.n_rows
+                runs.setdefault(pid, []).append((seq, r.shard_id))
+            assert len(runs) == tasks
+            for folded in runs.values():
+                # one contiguous run per shard, folded in shard-id order
+                folded.sort()
+                assert [seq for seq, _ in folded] == list(range(len(folded)))
+                assert [sid for _, sid in folded] == sorted(sid for _, sid in folded)
+    finally:
+        spark.conf.set(batch_conf, batch)
+
+
+def test_build_sharded_one_job_one_exchange(spark):
+    """The build is one shuffle and one fold: no route-key discovery job
+    before it, and (AQE off, so the shuffle map stage is not its own job)
+    exactly one Spark job with one Exchange for the whole collect."""
+    from sketchlib.config import CuckooConfig
+    from sketchlib.spark.shard import build_sharded
+
+    cfg = CuckooConfig(capacity=8192, fingerprint_bits=16, hash_strategy="xx")
+    keys = spark.range(3000).select(F.concat(F.lit("u"), F.col("id")).alias("key"))
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup("build_sharded_pin", "build_sharded pin")
+        built = build_sharded(keys, "key", 64, cfg=cfg)
+        rows = built.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("build_sharded_pin")
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(rows) == 64 and sum(r.n_rows for r in rows) == 3000
+    assert len(jobs) == 1, jobs
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 2
+    plan = built._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange ") == 1, plan
+    assert "shufflepartitionidpassthrough" in plan
 
 
 def test_build_sharded_end_to_end_unchanged(spark):

@@ -724,6 +724,41 @@ def test_sharded_build_checkpoint_resume(spark, docs_df, tmp_path):
     assert len([f for f in os.listdir(ck) if f.endswith(".arrow")]) == 4  # republished
 
 
+def test_sharded_build_mixed_resume_in_one_task(spark, docs_df, tmp_path):
+    """16 shards on 4 shuffle partitions: each task folds 4 shards. With
+    one shard's record deleted, its task re-emits 3 published shards and
+    freshly folds the fourth, byte-identically to the first build; only
+    the missing file is republished."""
+    import os
+
+    from sketchlib.spark.shard import build_sharded
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 4
+    keys = docs_df.select(F.col("url").alias("key"))
+    ck = str(tmp_path / "shard-ck")
+    first = build_sharded(keys, "key", num_shards=16, cfg=_cfg(), checkpoint_dir=ck)
+    assert first.rdd.getNumPartitions() == 4
+    rows1 = {r.shard_id: tuple(r) for r in first.collect()}
+    assert sorted(rows1) == list(range(16))
+
+    def files():
+        return {f: os.stat(os.path.join(ck, f)).st_ino
+                for f in os.listdir(ck) if f.endswith(".arrow")}
+
+    before = files()
+    assert len(before) == 16
+    victim = 5  # task 5 % 4 = 1 also holds shards 1, 9, 13
+    victim_file = f"shard-{victim:06d}.arrow"
+    os.remove(os.path.join(ck, victim_file))
+    resumed = build_sharded(keys, "key", num_shards=16, cfg=_cfg(), checkpoint_dir=ck)
+    rows2 = {r.shard_id: tuple(r) for r in resumed.collect()}
+    assert rows2 == rows1  # byte-identical: re-emitted and re-folded alike
+    after = files()
+    assert victim_file in after  # republished
+    del before[victim_file], after[victim_file]
+    assert after == before  # published shards re-emitted, not re-folded
+
+
 def test_sharded_empty_shards_probe_and_delete(spark):
     """Probes and deletes that hash to a shard with no state row:
     probes come back member=false (left join, not dropped); deletes are
