@@ -521,6 +521,10 @@ def q_bloom_membership(spark, sf_dir):
 # when a bench loop re-invokes the query (ShardedProbeIndex's own
 # hygiene contract). Evicted/old-session entries are destroyed
 # best-effort (their context may already be stopped).
+# The key is (application, sf_dir) with no data fingerprint: it assumes
+# the tables under sf_dir never change within one application. Rewrite
+# them in place and the cached filter answers for the old keys — use a
+# new sf_dir (or a new session) for new data.
 _SHARDED_IDX_CACHE: dict = {}
 
 
@@ -1707,9 +1711,9 @@ def q_source_similarity(spark, sf_dir):
 def q_sharded_bloom_membership(spark, sf_dir):
     """The sharded build is sketch-GENERIC (factory protocol): the same
     key-routed build/probe that shards the cuckoo filter shards a
-    Bloom filter (update/contains in place of insert_batch/
-    lookup_batch) — pick the per-shard sketch by delete/count needs
-    without touching the distribution layer. No false negatives ⇔
+    Bloom filter (both speak update/contains) — pick the per-shard
+    sketch by delete/count needs without touching the distribution
+    layer. No false negatives ⇔
     result == the distinct-key oracle."""
     from sketchlib.sketches import BloomFilter
     from sketchlib.spark.shard import build_sharded, probe_sharded

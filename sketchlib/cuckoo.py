@@ -94,6 +94,11 @@ class CuckooFilter:
         fold Arrow batches into any sketch kind uniformly."""
         self.insert_batch(items)
 
+    def contains(self, items) -> np.ndarray:
+        """Membership-protocol alias (``BloomFilter.contains``): probes
+        and UDFs call one name for every membership sketch."""
+        return self.lookup_batch(items)
+
     def _try_bucket(
         self, target: np.ndarray, fp: np.ndarray, todo: np.ndarray
     ) -> np.ndarray:

@@ -1,13 +1,16 @@
-"""Distributed sketch build: THE per-partition fold, zero shuffle.
+"""Distributed sketch build: THE fold, one ``mapInArrow`` over runs.
 
 The Spark-first shape (SURVEY.md §3.4): ``df.mapInArrow`` folds each
-input partition's Arrow batches into one sketch PER NAME via the
-vectorized numpy kernels, emitting one row per (partition, name) — no
-groupBy, no shuffle, no per-row Python. Every build in the library is
-this fold: ``build_sketches`` is the one-entry dict,
-``webbuild.build_web_sketches``/``build_column_sketches`` only choose
-each name's input. The merge (sketchlib.spark.merge) then combines the
-per-partition states by name.
+run of Arrow batches into one sketch PER NAME via the vectorized numpy
+kernels, emitting one row per (run, name) — no groupBy, no per-row
+Python. A run is a whole input partition (zero shuffle) or, for
+sharded builds, one shard id's sorted rows within a partition. Every
+build in the library is this fold: ``build_sketches`` is the one-entry
+dict, ``webbuild.build_web_sketches``/``build_column_sketches`` only
+choose each name's input, ``shard.build_sharded`` routes rows by shard
+id and folds shard runs. The merge (sketchlib.spark.merge) then
+combines per-partition states by name; shard rows are never merged
+across shards.
 
 Scale notes (100 TB / 10^12 docs):
 * HLL/CMS/KLL/t-digest/Bloom states are KBs–MBs regardless of input
@@ -15,12 +18,13 @@ Scale notes (100 TB / 10^12 docs):
 * A *merged* cuckoo filter must carry global geometry in every
   partition (2 bytes/slot), so the merged strategy is for capacities
   up to ~10^8-10^9; beyond that use ``sharded`` builds
-  (sketchlib.spark.shard): repartition by key-hash, one
+  (sketchlib.spark.shard): route by key-hash, one
   capacity/num_shards filter per shard, probes routed by the same
-  partitioner — no cross-shard merge needed, memory per task constant.
-* Checkpoint/resume is per-partition (north-rule lineage): each task
-  writes its finished row group to ``checkpoint_dir/part-{pid}``;
-  a resumed run re-emits stored rows instead of recomputing.
+  hash — no cross-shard merge needed, memory per task one shard.
+* Checkpoint/resume is per run (north-rule lineage): each task
+  publishes every finished run's row group to ``checkpoint_dir``
+  (``part-{pid}`` or ``shard-{id}``); a resumed run re-emits stored
+  rows instead of recomputing.
 """
 
 from __future__ import annotations
@@ -100,33 +104,89 @@ def _derive(col: pa.Array, how: str):
     return col
 
 
+def _update(sks: dict, rb: pa.RecordBatch, inputs: dict) -> None:
+    """Fold one batch into every named sketch. Its own function so the
+    loop variable dies on return: a finished run's sketch must not stay
+    alive in the fold's frame while the next run's factory() runs."""
+    derived: dict = {}
+    for name, sk in sks.items():
+        col, how = inputs[name]
+        if (col, how) not in derived:
+            derived[col, how] = _derive(rb.column(col), how)
+        x = derived[col, how]
+        if how == "tokens":
+            flat, tok_vals, tok_counts = x
+            try:
+                sk.update(tok_vals, weights=tok_counts)
+            except TypeError:  # sketch without weighted updates
+                sk.update(flat)
+        else:
+            sk.update(x)
+
+
+def _runs(batches: Iterator[pa.RecordBatch], pid: int, sharded: bool):
+    """→ (run id, batch slice | None). Unsharded, the partition is one
+    run, opened before its first batch so an empty partition still
+    emits. Sharded, column 0 is a shard id sorted within the partition:
+    each id is one contiguous run that may span batches."""
+    if not sharded:
+        yield pid, None
+        for rb in batches:
+            yield pid, rb
+        return
+    for rb in batches:
+        ids = rb.column(0).to_numpy()
+        starts = np.flatnonzero(np.diff(ids, prepend=-1)).tolist()
+        for lo, hi in zip(starts, [*starts[1:], len(ids)]):
+            yield int(ids[lo]), rb.slice(lo, hi - lo)
+
+
 def build_named(
     df,
     factories: dict[str, Callable[[], object]],
     inputs: dict[str, tuple[int, str]],
     checkpoint_dir: str | None = None,
+    num_shards: int | None = None,
 ):
-    """``df`` → one row per (partition, name) (SKETCH_ROW_SCHEMA).
+    """``df`` → one row per (run, name) (SKETCH_ROW_SCHEMA).
 
     ``df`` is the projected input; ``inputs[name] = (column index,
     how)`` picks each sketch's input, ``how`` ∈ {values, numeric,
     size, tokens} (see ``_derive``). A derived input is computed once
     per batch however many sketches read it.
 
-    ``factories`` run once per task on the executor and must be
+    A run is what one set of fresh sketches folds. By default it is the
+    whole partition: ``part_id`` is the partition id and an empty
+    partition still emits its row group. With ``num_shards``, column 0
+    of ``df`` is a shard id sorted within each partition
+    (``shard.build_sharded`` routes it so): every run of one id is
+    folded, emitted with ``part_id`` = shard id, and dropped before the
+    next run's sketches are made — one run's sketches resident per task.
+
+    ``factories`` run once per run on the executor and must be
     picklable zero-arg callables returning a fresh sketch — in
     particular they must NOT close over DataFrames or the SparkSession
     (hoist e.g. ``capacity=df.count()`` into a local first, or the
     closure capture fails with CONTEXT_ONLY_VALID_ON_DRIVER).
+
+    ``checkpoint_dir``: each run's row group is published atomically
+    (``part-{pid:05d}.arrow``, or ``shard-{id:06d}.arrow`` sharded);
+    a rerun re-emits published runs instead of re-folding them.
     """
     if checkpoint_dir:
         # resume is only valid against the SAME build: name→kind map,
-        # input columns and derivations AND partition count (partition
-        # ids are the lineage key — a changed maxPartitionBytes remaps
-        # rows to ids, silently double-counting/dropping on resume).
+        # input columns and derivations, and the run→rows map. Partition
+        # ids are the run key unsharded (a changed maxPartitionBytes
+        # remaps rows to ids, silently double-counting/dropping on
+        # resume); sharded, the key hash fixes it for a given num_shards.
         # Fingerprint the dir once, loudly reject mismatches.
         from .checkpoint import ensure_checkpoint_meta
 
+        layout = (
+            {"num_shards": int(num_shards)}
+            if num_shards
+            else {"partitions": df.rdd.getNumPartitions()}
+        )
         ensure_checkpoint_meta(
             df.sparkSession,
             checkpoint_dir,
@@ -137,60 +197,54 @@ def build_named(
                     name: [type(fac()).__name__, *inputs[name]]
                     for name, fac in factories.items()
                 },
-                "partitions": df.rdd.getNumPartitions(),
+                **layout,
             },
         )
+    run_file = "shard-{:06d}" if num_shards else "part-{:05d}"
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import uuid
+
         from pyspark import TaskContext
 
         from . import taskfs
 
-        pid = TaskContext.get().partitionId()
-        final = f"part-{pid:05d}.arrow"
         if checkpoint_dir:
             # executor-side IO goes through pyarrow.fs — tasks have no
             # JVM, and os.path on an hdfs://-s3a:// dir silently writes
             # executor-LOCAL files (resume would never fire). See
             # sketchlib/spark/taskfs.py.
             fs, base = taskfs.task_fs(checkpoint_dir)
-            done = f"{base.rstrip('/')}/{final}"
-            if taskfs.exists(fs, done):
-                yield from taskfs.read_ipc_table(fs, done).to_batches()
-                return
-        sks = {name: fac() for name, fac in factories.items()}
-        n = 0
-        for rb in batches:
-            n += rb.num_rows
-            derived: dict = {}
-            for name, sk in sks.items():
-                col, how = inputs[name]
-                if (col, how) not in derived:
-                    derived[col, how] = _derive(rb.column(col), how)
-                x = derived[col, how]
-                if how == "tokens":
-                    flat, tok_vals, tok_counts = x
-                    try:
-                        sk.update(tok_vals, weights=tok_counts)
-                    except TypeError:  # sketch without weighted updates
-                        sk.update(flat)
-                else:
-                    sk.update(x)
-        out = _emit(pid, n, sks)
-        if checkpoint_dir:
-            import uuid
 
-            # attempt-unique tmp + move = atomic publish (lineage
-            # record); orphaned tmps of dead attempts are GC'd inside
-            taskfs.publish_ipc_batch(
-                fs,
-                base,
-                f".part-{pid:05d}.tmp-{uuid.uuid4().hex[:8]}",
-                final,
-                _PA_SCHEMA,
-                out,
-            )
-        yield out
+        def finish(rid: int, n: int, sks: dict) -> pa.RecordBatch:
+            out = _emit(rid, n, sks)
+            if checkpoint_dir:
+                # attempt-unique tmp + move = atomic publish (lineage
+                # record); orphaned tmps of dead attempts are GC'd inside
+                name = run_file.format(rid)
+                tmp = f".{name}.tmp-{uuid.uuid4().hex[:8]}"
+                taskfs.publish_ipc_batch(fs, base, tmp, f"{name}.arrow", _PA_SCHEMA, out)
+            return out
+
+        run, sks, n = None, None, 0
+        for rid, rb in _runs(batches, TaskContext.get().partitionId(), bool(num_shards)):
+            if rid != run:
+                if sks is not None:
+                    yield finish(run, n, sks)
+                sks, run, n = None, rid, 0  # drop the finished run first
+                done = checkpoint_dir and f"{base.rstrip('/')}/{run_file.format(rid)}.arrow"
+                if done and taskfs.exists(fs, done):
+                    # run already published: re-emit it, skip its rows
+                    yield from taskfs.read_ipc_table(fs, done).to_batches()
+                    if not num_shards:
+                        return  # the partition's only run: skip the scan
+                else:
+                    sks = {name: fac() for name, fac in factories.items()}
+            if sks is not None and rb is not None:
+                _update(sks, rb, inputs)
+                n += rb.num_rows
+        if sks is not None:
+            yield finish(run, n, sks)
 
     return df.mapInArrow(fold, SKETCH_ROW_SCHEMA)
 

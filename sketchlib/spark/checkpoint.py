@@ -1,20 +1,24 @@
 """Checkpoint-resumable build lineage (north-rule requirement).
 
-Two granularities:
-* partition-level: build.build_named(checkpoint_dir=...) (behind
-  build_sketches / build_web_sketches) — each task atomically
-  publishes its finished row group as ``part-{pid}.arrow``; a rerun re-emits stored rows instead of
-  recomputing (the anti-join on completed lineage happens implicitly
-  by file existence, with identical input partitioning guaranteed by
-  deterministic parquet splits under fixed maxPartitionBytes).
-* run-level: the ``mark_stage_done`` / ``stage_done`` manifest
+Two mechanisms:
+* the build: build.build_named(checkpoint_dir=...) (behind every build —
+  build_sketches, build_web_sketches, shard.build_sharded) atomically
+  publishes each finished run's row group: ``part-{pid}.arrow`` for a
+  partition run, ``shard-{id}.arrow`` for a shard run. A rerun
+  re-emits stored rows instead of recomputing (the anti-join on
+  completed lineage happens implicitly by file existence); the
+  ``_meta.json`` fingerprint (``ensure_checkpoint_meta``) pins what
+  makes that sound — the partition count (deterministic parquet splits
+  under a fixed maxPartitionBytes keep partition runs stable), or the
+  shard count.
+* job stages: the ``mark_stage_done`` / ``stage_done`` manifest
   primitives — a resumed job checks ``stage_done`` and short-circuits
   completed stages (see jobs/web_build_job.py for the usage shape).
 
 Paths may be URIs (hdfs://, s3a://): every driver-side helper routes
 through the session's Hadoop FileSystem when given a session; the
-executor-side partition/shard files use pyarrow.fs (taskfs.py) because
-tasks have no JVM.
+executor-side run files use pyarrow.fs (taskfs.py) because tasks have
+no JVM.
 """
 
 from __future__ import annotations

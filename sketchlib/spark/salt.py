@@ -69,8 +69,11 @@ def partition_sizes(df) -> list[int]:
     caller's runtime SQLConf, so planning confs like
     ``spark.sql.shuffle.partitions`` resolve identically; the frame is
     re-bound to the clone from its analyzed plan), so queries planned
-    concurrently in the caller's session never see the flipped conf. If the plan transfer is unavailable,
-    falls back to a save/restore flip of the caller's session conf —
+    concurrently in the caller's session never see the flipped conf.
+    The clone path is Spark-4-only: it re-binds the plan through
+    ``org.apache.spark.sql.classic.Dataset``, which Spark 3.x does not
+    have. Where the plan transfer is unavailable (Spark 3.x, Connect),
+    it falls back to a save/restore flip of the caller's session conf —
     only then is the diagnostic unsafe to run concurrently with
     latency-sensitive queries."""
     spark = df.sparkSession

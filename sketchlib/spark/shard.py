@@ -6,10 +6,10 @@ per-task memory constant at any scale:
 
 * build: shard id = ``pmod(xxhash64(key), num_shards)``; rows route by
   shard id (``repartitionById``) onto min(num_shards, shuffle
-  partitions) tasks, sorted by shard id, and each task folds its
-  shards one at a time — ONE filter of capacity/num_shards resident
-  per task (mapInArrow fold); the result table (shard_id, state,
-  metrics) is the filter.
+  partitions) tasks, sorted by shard id, and the library's one build
+  fold (``build.build_named``) folds each task's shards one run at a
+  time — ONE filter of capacity/num_shards resident per task; the
+  result table (shard_id, state, metrics) is the filter.
 * probe: zero-shuffle broadcast lookup while total state fits the
   broadcast budget (blobs broadcast once per executor, probes answered
   on their scan partitions); above it, a cogroup on shard_id — probes
@@ -24,20 +24,18 @@ for combining incremental builds.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import CuckooConfig
 from ..cuckoo import CuckooFilter
 from ..serde import loads
-from .build import sketch_metrics
+from .build import build_named, sketch_metrics
 
 SHARD_SCHEMA = (
     "shard_id int, n_rows long, item_count long, fail_count long, "
     "load_factor double, state binary"
 )
+_SHARD_COLS = ["shard_id", "n_rows", "item_count", "fail_count", "load_factor", "state"]
 
 
 def _shard_col(key_col: str, num_shards: int):
@@ -52,28 +50,29 @@ def build_sharded(
     factory=None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """→ one row per shard (SHARD_SCHEMA). One shard resident per task.
+    """→ one row per non-empty shard (SHARD_SCHEMA). One shard resident
+    per task.
 
     Rows route by shard id with ``repartitionById`` onto
     ``min(num_shards, spark.sql.shuffle.partitions)`` tasks (shard id
-    modulo tasks) and sort by shard id within each task. Each task
-    folds its shards one run at a time: at every shard-id change it
-    emits the finished shard's row and drops that filter before
-    building the next, so per-task memory is one shard's filter while
-    the task count follows cores, not shards.
+    modulo tasks) and sort by shard id within each task; then the one
+    build fold (``build.build_named`` with ``num_shards``) folds each
+    shard's run into a fresh sketch, emits it and drops it before the
+    next run, so per-task memory is one shard's filter while the task
+    count follows cores, not shards.
 
     ``factory``: optional zero-arg callable building the per-shard
-    sketch (any membership sketch with update/lookup_batch-or-contains);
-    default builds a CuckooFilter with capacity/num_shards geometry —
-    total state across shards stays ~capacity × 2 bytes regardless of
-    shard count, the property that makes this the 10^12-key path.
+    sketch (any membership sketch with update/contains); default
+    builds a CuckooFilter with capacity/num_shards geometry — total
+    state across shards stays ~capacity × 2 bytes regardless of shard
+    count, the property that makes this the 10^12-key path.
 
-    ``checkpoint_dir``: per-shard resume lineage (north rule), same
-    contract as build_sketches — each task atomically publishes every
-    finished shard row (``shard-{id}.arrow``); a resumed run re-emits
-    published rows instead of re-folding those shards. Valid because
-    the shard→rows assignment is the key hash (stable for a given key
-    set and num_shards, unlike scan-partition ids)."""
+    ``checkpoint_dir``: per-shard resume lineage (north rule), the
+    build fold's contract — every finished shard's row is published
+    atomically (``shard-{id:06d}.arrow``); a resumed run re-emits
+    published shards instead of re-folding them. Valid because the
+    shard→rows assignment is the key hash (stable for a given key set
+    and num_shards, unlike scan-partition ids)."""
     if factory is None:
         if cfg is None:
             raise ValueError("need cfg or factory")
@@ -90,112 +89,25 @@ def build_sharded(
     tasks = min(num_shards, int(spark.conf.get("spark.sql.shuffle.partitions")))
     # one shuffle: every shard's rows land in one task, as one sorted run
     keyed = (
-        df.select(F.col(key_col).alias("key"))
-        .withColumn("shard_id", _shard_col("key", num_shards))
+        df.select(_shard_col(key_col, num_shards).alias("shard_id"), F.col(key_col).alias("key"))
         .repartitionById(tasks, "shard_id")
         .sortWithinPartitions("shard_id")
     )
-
-    if checkpoint_dir:
-        # shard→rows assignment is the key hash (stable across input
-        # partitioning), so the fingerprint pins kind/shards/key —
-        # but NOT partition count, which may legitimately change
-        from .checkpoint import ensure_checkpoint_meta
-
-        ensure_checkpoint_meta(
-            spark,
-            checkpoint_dir,
-            {
-                "op": "build_sharded",
-                "kind": type(factory()).__name__,
-                "key_col": key_col,
-                "num_shards": int(num_shards),
-            },
-        )
-
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import uuid
-
-        import numpy as np
-
-        from . import taskfs
-
-        out_schema = pa.schema(
-            [
-                ("shard_id", pa.int32()),
-                ("n_rows", pa.int64()),
-                ("item_count", pa.int64()),
-                ("fail_count", pa.int64()),
-                ("load_factor", pa.float64()),
-                ("state", pa.binary()),
-            ]
-        )
-        # executor-side IO via pyarrow.fs (tasks have no JVM; os.path on
-        # an hdfs://-s3a:// dir writes executor-LOCAL files and resume
-        # silently never fires) — see sketchlib/spark/taskfs.py
-        ck_fs = ck_base = None
-        if checkpoint_dir:
-            ck_fs, ck_base = taskfs.task_fs(checkpoint_dir)
-
-        def finish(sid: int, f, n: int) -> pa.RecordBatch:
-            items, fails, load = sketch_metrics(f)
-            out = pa.RecordBatch.from_pydict(
-                {
-                    "shard_id": [sid],
-                    "n_rows": [n],
-                    "item_count": [items],
-                    "fail_count": [fails],
-                    "load_factor": [load],
-                    "state": [f.to_bytes()],
-                },
-                schema=out_schema,
-            )
-            if checkpoint_dir:
-                # attempt-unique tmp + move = atomic publish; identical
-                # bytes per attempt make last-writer-wins safe; dead
-                # attempts' orphaned tmps are GC'd inside
-                taskfs.publish_ipc_batch(
-                    ck_fs,
-                    ck_base,
-                    f".shard-{sid:06d}.tmp-{uuid.uuid4().hex[:8]}",
-                    f"shard-{sid:06d}.arrow",
-                    out_schema,
-                    out,
-                )
-            return out
-
-        # run-length fold: rows arrive sorted by shard id, so a shard is
-        # one contiguous run that may span batches
-        sid, f, n = None, None, 0
-        for rb in batches:
-            shards = rb.column("shard_id").to_numpy()
-            starts = np.flatnonzero(np.diff(shards, prepend=-1)).tolist()
-            for lo, hi in zip(starts, [*starts[1:], len(shards)]):
-                if int(shards[lo]) != sid:
-                    if f is not None:
-                        yield finish(sid, f, n)
-                    f = None  # drop the finished filter before factory()
-                    sid, n = int(shards[lo]), 0
-                    done = ck_base and f"{ck_base.rstrip('/')}/shard-{sid:06d}.arrow"
-                    if done and taskfs.exists(ck_fs, done):
-                        # shard already published: re-emit, skip its run
-                        yield from taskfs.read_ipc_table(ck_fs, done).to_batches()
-                    else:
-                        f = factory()
-                if f is not None:
-                    # factory protocol: cuckoo-style insert_batch, else the
-                    # MergeableSketch update (Bloom/HLL/... shard the same way)
-                    (getattr(f, "insert_batch", None) or f.update)(
-                        rb.column("key").slice(lo, hi - lo)
-                    )
-                    n += hi - lo
-        if f is not None:
-            yield finish(sid, f, n)
-
-    return keyed.mapInArrow(fold, SHARD_SCHEMA)
+    # the sketch is named after key_col, so the checkpoint fingerprint
+    # pins it (as build_sketches does)
+    rows = build_named(
+        keyed, {key_col: factory}, {key_col: (1, "values")}, checkpoint_dir, num_shards
+    )
+    return rows.select(F.col("part_id").alias("shard_id"), *_SHARD_COLS[1:])
 
 
-_SHARD_COLS = ["shard_id", "n_rows", "item_count", "fail_count", "load_factor", "state"]
+def _shard_row(sid: int, n_rows: int, f):
+    """One SHARD_SCHEMA row (pandas) for shard ``sid`` holding ``f``."""
+    import pandas as pd
+
+    row = (int(sid), int(n_rows), *sketch_metrics(f), f.to_bytes())
+    return pd.DataFrame([row], columns=_SHARD_COLS)
+
 
 # worker-level deserialized-shard cache for the broadcast probe path:
 # the docstring promises 'each worker deserializes a shard at most once
@@ -259,17 +171,7 @@ def delete_sharded(
             return state[_SHARD_COLS]  # untouched shard passes through
         f = loads(state["state"].iloc[0])
         f.delete_batch(dels["key"])
-        items, fails, load = sketch_metrics(f)
-        return pd.DataFrame(
-            {
-                "shard_id": [int(state["shard_id"].iloc[0])],
-                "n_rows": [int(state["n_rows"].iloc[0])],
-                "item_count": [items],
-                "fail_count": [fails],
-                "load_factor": [load],
-                "state": [f.to_bytes()],
-            }
-        )
+        return _shard_row(state["shard_id"].iloc[0], state["n_rows"].iloc[0], f)
 
     return (
         keyed.groupBy("shard_id")
@@ -290,17 +192,7 @@ def merge_sharded(shard_df: DataFrame) -> DataFrame:
         f = loads(pdf["state"].iloc[0])
         for blob in pdf["state"].iloc[1:]:
             f.merge(loads(blob))
-        items, fails, load = sketch_metrics(f)
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "n_rows": [int(pdf["n_rows"].sum())],
-                "item_count": [items],
-                "fail_count": [fails],
-                "load_factor": [load],
-                "state": [f.to_bytes()],
-            }
-        )
+        return _shard_row(pdf["shard_id"].iloc[0], pdf["n_rows"].sum(), f)
 
     return shard_df.groupBy("shard_id").applyInPandas(merge_group, SHARD_SCHEMA)
 
@@ -412,8 +304,7 @@ def probe_sharded(
                         if blob is None:
                             continue  # empty shard: member stays False
                         f = _shard_from(bid, int(sid), blob)
-                        fn = getattr(f, "lookup_batch", None) or f.contains
-                        member[idx] = np.asarray(fn(pdf[key_col].iloc[idx]), bool)
+                        member[idx] = np.asarray(f.contains(pdf[key_col].iloc[idx]), bool)
                 out = pdf.copy()
                 out["member"] = member
                 yield out
@@ -437,8 +328,7 @@ def probe_sharded(
                 "(merge_sharded) before probing"
             )
         f = loads(state_pdf["state"].iloc[0])
-        fn = getattr(f, "lookup_batch", None) or f.contains
-        out["member"] = np.asarray(fn(probe_pdf[key_col]), bool)
+        out["member"] = np.asarray(f.contains(probe_pdf[key_col]), bool)
         return out
 
     return (

@@ -1,7 +1,7 @@
 """Executor-side checkpoint IO — pyarrow.fs, because tasks have no JVM.
 
-The per-partition / per-shard checkpoint files are written INSIDE
-mapInArrow tasks, where the Hadoop FileSystem API (fsio.py, driver-only
+The build fold's checkpoint files (one per partition or shard run) are
+written INSIDE mapInArrow tasks, where the Hadoop FileSystem API (fsio.py, driver-only
 — it needs the py4j gateway) does not exist. ``os.path``/``open`` are
 wrong there for the same reason fsio documents: on ``hdfs://`` or
 ``s3a://`` checkpoint dirs they silently write executor-LOCAL files

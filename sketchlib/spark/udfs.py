@@ -50,8 +50,7 @@ def membership_udf(spark, sketch_or_blob):
     @F.pandas_udf(BooleanType())
     def contains(col: pd.Series) -> pd.Series:
         sk = _sketch_from(bid, bc)
-        fn = getattr(sk, "lookup_batch", None) or sk.contains
-        return pd.Series(fn(col))
+        return pd.Series(sk.contains(col))
 
     return contains
 

@@ -19,6 +19,8 @@ the executors' parquet writes land)::
     epoch-{batch_id}/   shard table (SHARD_SCHEMA parquet) AFTER batch
     CURRENT             pointer file: "{batch_id}" of the last applied
                         batch (written to a temp name + atomic rename)
+    _CHECKPOINT         the streaming checkpoint these batch ids belong
+                        to (recorded by the first ``attach``)
 
 Exactly-once across failures rides foreachBatch's epoch replay: a
 replayed batch_id ≤ CURRENT is skipped (its merge already published),
@@ -26,6 +28,9 @@ and a crash between the epoch write and the pointer swap just
 recomputes the epoch from the previous pointer — the merge is
 deterministic, so the overwrite is byte-stable. This is the standard
 idempotent-foreachBatch recipe from the Structured Streaming guide.
+The skip is sound only under the checkpoint whose batch ids built the
+state — ids restart at 0 under a new one — so ``attach`` refuses any
+other checkpoint instead of silently dropping its first batches.
 
 Disk ceiling: each batch writes a full new shard-table copy (merge
 output), so after the pointer swap every epoch older than the
@@ -234,7 +239,38 @@ class ShardedStreamBuilder:
         if cur is not None:
             self._prune_epochs(spark, keep_from=cur)
 
+    def _pin_checkpoint(self, spark, checkpoint_dir: str) -> None:
+        """Raise unless ``checkpoint_dir`` is the streaming checkpoint
+        this state was built under. Batch ids restart at 0 under a new
+        checkpoint, so process_batch's replay skip (batch_id ≤ CURRENT)
+        would drop its first batches — false negatives from a membership
+        filter. The first attach records the checkpoint in
+        ``_CHECKPOINT``; a state with applied batches also refuses a
+        checkpoint that has assigned none (the recorded path, deleted
+        and recreated)."""
+        from ..spark.fsio import _fs_path, read_bytes, write_text
+        from .incremental import IncrementalSketchBuilder
+
+        fs, p = _fs_path(spark, checkpoint_dir)
+        ident = fs.makeQualified(p).toString()
+        rec = f"{self.state_dir}/_CHECKPOINT"
+        rfs, rp = _fs_path(spark, rec)
+        stored = read_bytes(spark, rec).decode() if rfs.exists(rp) else None
+        restarted = self._pointer(spark) is not None and not (
+            IncrementalSketchBuilder._checkpoint_has_batches(checkpoint_dir, spark)
+        )
+        if stored not in (None, ident) or restarted:
+            raise ValueError(
+                f"state_dir {self.state_dir} holds the batches of streaming "
+                f"checkpoint {stored or 'an earlier one'}; batch ids restart at 0 "
+                f"under {ident}, so its first batches would be skipped as "
+                "replays — use a fresh state_dir for this checkpoint"
+            )
+        if stored is None:
+            write_text(spark, rec, ident)
+
     def attach(self, stream_df, checkpoint_dir: str, trigger_once: bool = True):
+        self._pin_checkpoint(stream_df.sparkSession, checkpoint_dir)
         writer = (
             stream_df.writeStream.outputMode("update")
             .foreachBatch(self.process_batch)

@@ -9,6 +9,7 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF = "/root/testdata/sf0.001"
+SF001 = "/root/testdata/sf0.01"
 
 
 def test_registry_shape():
@@ -135,3 +136,32 @@ def test_cuckoo_delete_driver_collect_guard(spark, monkeypatch):
     monkeypatch.setattr(entry_mod, "_DRIVER_DELETE_KEYS_MAX", n - 1)
     with pytest.raises(ValueError, match="delete_sharded"):
         entry_mod.q_cuckoo_delete(spark, SF)
+
+
+@pytest.mark.parametrize(
+    "name", ["hll_distinct_check", "cms_frequency_check", "quantile_sketches_check"]
+)
+def test_sketch_check_plan_shape(spark, monkeypatch, name):
+    """Each sketch check builds in one scan with no shuffle, and at
+    sf0.01 its merge takes gather's direct branch (one collect of the
+    build rows, no executor-level fold)."""
+    from sketchlib.spark import merge
+
+    built = []
+    direct = merge._direct_collect
+
+    def spy(frame):
+        built.append(frame._jdf.queryExecution().executedPlan().toString())
+        return direct(frame)
+
+    def no_tree(*a, **k):
+        raise AssertionError("merge left gather's direct branch")
+
+    monkeypatch.setattr(merge, "_direct_collect", spy)
+    monkeypatch.setattr(merge, "fold_groups_rdd", no_tree)
+    assert entry_mod.queries()[name](spark, SF001).count() > 0
+    assert len(built) == 1, built  # one build frame, merged directly
+    plan = built[0]
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "Exchange" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan

@@ -210,7 +210,7 @@ def test_checkpoint_kill_resume_under_local_cluster(docs_parquet, tmp_path):
     for p in published:
         with ipc.open_file(p) as rd:
             t = rd.read_all()
-        sid = str(t.column("shard_id")[0].as_py())
+        sid = str(t.column("part_id")[0].as_py())
         pre[sid] = hashlib.sha256(t.column("state")[0].as_py()).hexdigest()
 
     # resume (no slow-down) under local-cluster

@@ -759,6 +759,68 @@ def test_sharded_build_mixed_resume_in_one_task(spark, docs_df, tmp_path):
     assert after == before  # published shards re-emitted, not re-folded
 
 
+@pytest.mark.parametrize("num_shards", [3, 16, 64])
+def test_sharded_bloom_states_equal_driver_builds(spark, num_shards):
+    """Independent oracle for the sharded fold: a Bloom filter's state
+    does not depend on insert order, so every shard's state must be
+    byte-identical to a filter built on the driver from exactly the keys
+    Spark's own pmod(xxhash64(key), n) assigns to that shard. 37-row
+    Arrow batches make shard runs span batch boundaries."""
+    import pyarrow as pa
+
+    from sketchlib.spark.shard import build_sharded
+
+    keys = spark.range(3000).select(F.concat(F.lit("url-"), F.col("id")).alias("key"))
+    want: dict[int, list[str]] = {}
+    for r in keys.selectExpr("key", f"pmod(xxhash64(key), {num_shards}) AS s").collect():
+        want.setdefault(r.s, []).append(r.key)
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    batch = spark.conf.get(batch_conf)
+    spark.conf.set(batch_conf, "37")
+    try:
+        rows = build_sharded(
+            keys, "key", num_shards, factory=lambda: BloomFilter(capacity=512, fp_rate=0.01)
+        ).collect()
+    finally:
+        spark.conf.set(batch_conf, batch)
+    assert sorted(r.shard_id for r in rows) == sorted(want)  # one row per non-empty shard
+    for r in rows:
+        ref = BloomFilter(capacity=512, fp_rate=0.01)
+        ref.update(pa.array(want[r.shard_id]))
+        assert bytes(r.state) == ref.to_bytes(), f"shard {r.shard_id}"
+        assert r.n_rows == r.item_count == len(want[r.shard_id])
+        assert r.fail_count == 0
+
+
+def test_sharded_checkpoint_of_old_layout_rejected(spark, tmp_path):
+    """A sharded checkpoint dir in the earlier layout (its own
+    ``build_sharded`` fingerprint, 6-column shard files) must be refused
+    loudly, not resumed: its files lack the build row's sketch column."""
+    import json
+    import os
+
+    import pyarrow as pa
+
+    from sketchlib.spark.shard import build_sharded
+
+    ck = tmp_path / "old-shard-ck"
+    ck.mkdir()
+    old_meta = {"op": "build_sharded", "kind": "CuckooFilter", "key_col": "key",
+                "num_shards": 4}
+    (ck / "_meta.json").write_text(json.dumps(old_meta, sort_keys=True))
+    old_row = pa.table({"shard_id": pa.array([0], pa.int32()), "n_rows": [1],
+                        "item_count": [1], "fail_count": [0], "load_factor": [0.0],
+                        "state": [b"x"]})
+    with pa.OSFile(str(ck / "shard-000000.arrow"), "wb") as sink:
+        with pa.ipc.new_file(sink, old_row.schema) as w:
+            w.write_table(old_row)
+    before = sorted(os.listdir(ck))
+    keys = spark.createDataFrame([(f"k{i}",) for i in range(50)], "key string")
+    with pytest.raises(ValueError, match="different build"):
+        build_sharded(keys, "key", num_shards=4, cfg=_cfg(), checkpoint_dir=str(ck))
+    assert sorted(os.listdir(ck)) == before
+
+
 def test_sharded_empty_shards_probe_and_delete(spark):
     """Probes and deletes that hash to a shard with no state row:
     probes come back member=false (left join, not dropped); deletes are

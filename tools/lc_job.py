@@ -152,15 +152,16 @@ def run_sharded(
     def factory():
         f = CuckooFilter(shard_cfg)
         if slow_ms:
-            # instance-level wrap: type(f).__name__ stays CuckooFilter,
-            # so the checkpoint fingerprint matches a plain resume run
-            orig = f.insert_batch
+            # wrap update, the build fold's one entry point, on the
+            # instance: the fingerprint records type(f).__name__, which
+            # stays CuckooFilter, so a plain resume run matches it
+            orig = f.update
 
-            def slow_insert(keys):
+            def slow_update(keys):
                 time.sleep(slow_ms / 1000.0)
                 return orig(keys)
 
-            f.insert_batch = slow_insert
+            f.update = slow_update
         return f
 
     shard_df = build_sharded(
